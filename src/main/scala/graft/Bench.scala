@@ -76,11 +76,9 @@ object Bench {
         Some((open, mpb))
       }
     })
-  /** Shared with tools.ScalingHunt — the two measurement paths must use
-    * byte-identical split configs, and the None branch must RESET to the
-    * TileConfs defaults (a prior finer-split path would otherwise leak
-    * into this scan's timing). */
-  private[graft] def tuneSplits(s: SparkSession, path: String, cpus: Int): Unit =
+  /** The None branch RESETS to the TileConfs defaults: a prior
+    * finer-split scan would otherwise leak into this scan's timing. */
+  private def tuneSplits(s: SparkSession, path: String, cpus: Int): Unit =
     adaptiveSplit(path, cpus) match {
       case Some((open, mpb)) =>
         s.conf.set("spark.sql.files.openCostInBytes", open.toString)
@@ -90,21 +88,17 @@ object Bench {
         s.conf.set("spark.sql.files.maxPartitionBytes", (32L << 20).toString)
     }
 
-  private def newSession(cpus: Int, tileConfs: Boolean): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val withConfs = if (tileConfs) TileConfs.foldLeft(b) {
-      case (bb, (k, v)) => bb.config(k, v)
-    } else b
-    val s = withConfs.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+  private def withTileConfs(s: SparkSession): SparkSession = {
+    TileConfs.foreach { case (k, v) => s.conf.set(k, v) }
     s
   }
+
+  /** The registry's headline queries, in registry order. */
+  private[graft] def headline: Seq[String] = Queries.specs.filter(_.headline).map(_.name)
+
+  /** Every key of the BENCH JSON `queries` map, in output order. */
+  private[graft] def leafKeys: Seq[String] =
+    headline ++ Seq("q30_veg_flagship", "q34_irgb_fused", "q34_irgb_bucketed")
 
   final case class BenchData(tilesPath: String, gardensPath: String,
                              gridW: Int, gridH: Int, ts: Int, nGardens: Long,
@@ -135,7 +129,7 @@ object Bench {
     // measures the engine's decode+join+classify CPU rather than a
     // single-box memory-bandwidth floor that a real N-node cluster would
     // scale away with its aggregate I/O (16 GB png: ~5 s/scan at ANY
-    // local thread count — measured in tools/Probe384)
+    // local thread count)
     val tilesPath = s"$root/tilesjpg_g${gridW}x${gridH}_ts$ts"
     val gardensPath = s"$root/gardens_n${nGardens}_g${gridW}x$gridH"
     if (!Files.exists(Paths.get(tilesPath))) {
@@ -232,48 +226,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Sessions.cpus
     val headlineRounds = sys.env.getOrElse("SPARK_GRAFT_HEADLINE_ROUNDS", "4").toInt
 
     // ---------- part 1: headline queries at local[cpus]
     // relational queries: DEFAULT reader configs (no image-table tunings)
-    val spark = newSession(cpus, tileConfs = false)
+    val spark = Sessions.local(s"graft-bench-$cpus", cpus)
     val bd = benchData(spark, sfDir)
     import bd.{tilesPath, gardensPath, gridW, gridH, ts, nGardens}
     // the flagship runs in a sibling session with the image-table parquet
     // confs, sharing the same SparkContext/executors
-    val tileS = spark.newSession()
-    TileConfs.foreach { case (k, v) => tileS.conf.set(k, v) }
-
-    val headline = Seq(
-      "q01_summary_agg", "q02_groupby_multi", "q06_spatial_sort",
-      "q11_dedup_exact", "q14_langid", "q16_embedding_topk", "q17_ngram_jaccard",
-      "q41_asof_join", "q42_range_join", "q43_repetition", "q44_keywords",
-      "q45_decontaminate", "q46_hash_split", "q47_dedup_clusters",
-      "q48_redact_pii", "q49_stratified_sample", "q50_pack_sequences",
-      "q51_vocab_oov", "q52_zorder", "q53_decontaminate_bloom",
-      "q54_mixture_upsample", "q55_image_quality", "q57_chunk_overlap",
-      "q58_shuffle_order", "q60_dup_spans", "q61_heavy_hitters",
-      "q62_gapfill_resample", "q63_exact_quantiles", "q64_lm_score",
-      "q65_quantize_int8", "q66_kmeans_assign", "q67_augment_image",
-      "q68_source_profile", "q69_source_overlap", "q70_tile_pyramid",
-      "q71_snapshot_diff", "q72_sliding_window", "q74_cube_rollup",
-      "q75_lang_pivot", "q76_curriculum_ntile", "q77_funnel",
-      "q78_retention_cohort", "q79_label_centroid", "q80_event_transitions",
-      "q81_hll_distinct", "q82_rrf_fusion", "q83_activity_bitmap",
-      "q85_star_rollup", "q86_trend_slope", "q87_agg_merge",
-      "q88_cdc_compact", "q89_source_gini", "q90_budget_apportion",
-      "q91_mad_outliers", "q92_scd2_intervals", "q93_countmin_sketch",
-      "q94_inverted_index", "q95_bm25_topk", "q96_sessionize",
-      "q97_rank_auc", "q98_cohen_kappa", "q99_pagerank", "q100_calibration",
-      // q106/q112/q113/q126 are excluded: they read fixtures/sidecars
-      // Verify's setup builds, which need not exist at bench time
-      "q101_ivfpq_adc", "q102_semdedup", "q103_triangle_census",
-      "q104_feature_gram", "q105_pps_sample", "q107_ppjoin", "q108_mosaic_ccl",
-      "q110_pca_power", "q111_negative_sample", "q117_span_coalesce",
-      "q118_weighted_reservoir", "q119_containment_join", "q120_radius_join",
-      "q121_collocation_lift", "q122_sorted_neighborhood",
-      "q125_image_canonical", "q127_bpe_pair_stats")
+    val tileS = withTileConfs(spark.newSession())
     // warmup (JIT + codegen caches), then interleaved min-of-N rounds
     headline.foreach(name => SparkEntry.queries(name)(spark, sfDir).count())
     val idx0 = buildIndex(tileS, gardensPath, ts)
@@ -320,10 +283,9 @@ object Bench {
             time(runIrgb())._1, time(runIrgbBucketed())._1)
       }
     val queryTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
-    (headline ++ Seq("q30_veg_flagship", "q34_irgb_fused", "q34_irgb_bucketed"))
-      .zipWithIndex.foreach { case (name, i) =>
-        queryTimes(name) = headlineReps.map(_(i)).min
-      }
+    leafKeys.zipWithIndex.foreach { case (name, i) =>
+      queryTimes(name) = headlineReps.map(_(i)).min
+    }
     val tFlag = queryTimes("q30_veg_flagship")
     val tIrgb = queryTimes("q34_irgb_fused")
     val tIrgbB = queryTimes("q34_irgb_bucketed")
@@ -369,7 +331,7 @@ object Bench {
       * marginal efficiency w_N/(4*w_4N) is the amortized-scaling number a
       * bigger table would converge to, measured without one. */
     def repsAt(cpus: Int, n: Int): (Seq[Double], Seq[Double]) = {
-      val s = newSession(cpus, tileConfs = true)
+      val s = withTileConfs(Sessions.local(s"graft-bench-$cpus", cpus))
       val idx = buildIndex(s, gardensPath, ts)
       tuneSplits(s, tilesPath, cpus) // waves-aware splits per core level
       val (rows, pix) = runFlagship(s, idx, tilesPath, ts) // warm

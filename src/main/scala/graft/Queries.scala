@@ -7,6 +7,11 @@ import graft.data.Synthetic
 import graft.functions.{DotF64, Fingerprint, MinHashSig, PyRandomGolden, SimHash64}
 import graft.pipeline.{CellToTileCode, Exprs, KnnJoin, VegPipeline}
 
+/** One registered query: its builder over an sf dir, the DuckDB SQL that
+  * checks its output, and whether Bench times it as a headline leaf. */
+final case class QuerySpec(name: String, build: (SparkSession, String) => DataFrame,
+                           oracleSql: String, headline: Boolean)
+
 /** The operator surface of the engine, one entry per SURVEY.md §2 operator
   * (plus the large-scale training-data-pipeline operators), each phrased
   * over the driver testdata tables (with a DuckDB oracle) or over the
@@ -1854,7 +1859,8 @@ object Queries {
     // former separate docs.count() was a second full scan
     val hist = docs.groupBy("n_chars").agg(count(lit(1)).as("cnt"))
       .localCheckpoint(true)
-    val total = hist.agg(sum("cnt")).head().getLong(0)
+    // an empty corpus sums to null: zero rows, so every target rank is 0
+    val total = hist.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
     val cum = graft.functions.PrefixSum.runningTotal(hist, "n_chars", "cnt", "cum")
     val targets = Seq(25, 50, 75, 95, 99).map(p => (p, (p * total + 99) / 100))
     val tdf = s.createDataFrame(targets).toDF("pct", "rank")
@@ -4920,263 +4926,139 @@ object Queries {
       |SELECT a, b, n_pairs FROM g
       |ORDER BY n_pairs DESC, a, b LIMIT 20""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_summary_agg" -> (q01 _),
-    "q02_groupby_multi" -> (q02 _),
-    "q03_limit_firstn" -> (q03 _),
-    "q04_md5_filter" -> (q04 _),
-    "q05_uprn_explode" -> (q05 _),
-    "q06_spatial_sort" -> (q06 _),
-    "q07_tilecode" -> (q07 _),
-    "q08_recombine_union" -> (q08 _),
-    "q09_coverage_minmax" -> (q09 _),
-    "q10_window_topk" -> (q10 _),
-    "q11_dedup_exact" -> (q11 _),
-    "q12_token_count" -> (q12 _),
-    "q13_quality_score" -> (q13 _),
-    "q14_langid" -> (q14 _),
-    "q15_bpe_tokens" -> (q15 _),
-    "q16_embedding_topk" -> (q16 _),
-    "q17_ngram_jaccard" -> (q17 _),
-    "q18_stream_window" -> (q18 _),
-    "q19_flights_datefloat" -> (q19 _),
-    "q20_knn_points" -> (q20 _),
-    "q21_dim_join" -> (q21 _),
-    "q22_semi_anti" -> (q22 _),
-    "q23_fingerprint" -> (q23 _),
-    "q24_simhash_dedup" -> (q24 _),
-    "q25_minhash_lsh" -> (q25 _),
-    "q26_phash_neardup" -> (q26 _),
-    "q27_ann_lsh" -> (q27 _),
-    "q28_ann_ivf" -> (q28 _),
-    "q29_embedding_neardup" -> (q29 _),
-    "q30_veg_flagship" -> (q30 _),
-    "q31_phash_dedup" -> (q31 _),
-    "q32_veg_summary" -> (q32 _),
-    "q33_toid2uprn" -> (q33 _),
-    "q34_veg_irgb" -> (q34 _),
-    "q35_veg_nn" -> (q35 _),
-    "q36_media_frames" -> (q36 _),
-    "q37_audio_features" -> (q37 _),
-    "q38_seeded_sample" -> (q38 _),
-    "q39_veg_hex" -> (q39 _),
-    "q40_sessionize" -> (q40 _),
-    "q41_asof_join" -> (q41 _),
-    "q42_range_join" -> (q42 _),
-    "q43_repetition" -> (q43 _),
-    "q44_keywords" -> (q44 _),
-    "q45_decontaminate" -> (q45 _),
-    "q46_hash_split" -> (q46 _),
-    "q47_dedup_clusters" -> (q47 _),
-    "q48_redact_pii" -> (q48 _),
-    "q49_stratified_sample" -> (q49 _),
-    "q50_pack_sequences" -> (q50 _),
-    "q51_vocab_oov" -> (q51 _),
-    "q52_zorder" -> (q52 _),
-    "q53_decontaminate_bloom" -> (q53 _),
-    "q54_mixture_upsample" -> (q54 _),
-    "q55_image_quality" -> (q55 _),
-    "q56_stream_dedup" -> (q56 _),
-    "q57_chunk_overlap" -> (q57 _),
-    "q58_shuffle_order" -> (q58 _),
-    "q59_stream_join" -> (q59 _),
-    "q60_dup_spans" -> (q60 _),
-    "q61_heavy_hitters" -> (q61 _),
-    "q62_gapfill_resample" -> (q62 _),
-    "q63_exact_quantiles" -> (q63 _),
-    "q64_lm_score" -> (q64 _),
-    "q65_quantize_int8" -> (q65 _),
-    "q66_kmeans_assign" -> (q66 _),
-    "q67_augment_image" -> (q67 _),
-    "q68_source_profile" -> (q68 _),
-    "q69_source_overlap" -> (q69 _),
-    "q70_tile_pyramid" -> (q70 _),
-    "q71_snapshot_diff" -> (q71 _),
-    "q72_sliding_window" -> (q72 _),
-    "q73_stream_enrich" -> (q73 _),
-    "q74_cube_rollup" -> (q74 _),
-    "q75_lang_pivot" -> (q75 _),
-    "q76_curriculum_ntile" -> (q76 _),
-    "q77_funnel" -> (q77 _),
-    "q78_retention_cohort" -> (q78 _),
-    "q79_label_centroid" -> (q79 _),
-    "q80_event_transitions" -> (q80 _),
-    "q81_hll_distinct" -> (q81 _),
-    "q82_rrf_fusion" -> (q82 _),
-    "q83_activity_bitmap" -> (q83 _),
-    "q84_channel_norm" -> (q84 _),
-    "q85_star_rollup" -> (q85 _),
-    "q86_trend_slope" -> (q86 _),
-    "q87_agg_merge" -> (q87 _),
-    "q88_cdc_compact" -> (q88 _),
-    "q89_source_gini" -> (q89 _),
-    "q90_budget_apportion" -> (q90 _),
-    "q91_mad_outliers" -> (q91 _),
-    "q92_scd2_intervals" -> (q92 _),
-    "q93_countmin_sketch" -> (q93 _),
-    "q94_inverted_index" -> (q94 _),
-    "q95_bm25_topk" -> (q95 _),
-    "q96_sessionize" -> (q96 _),
-    "q97_rank_auc" -> (q97 _),
-    "q98_cohen_kappa" -> (q98 _),
-    "q99_pagerank" -> (q99 _),
-    "q100_calibration" -> (q100 _),
-    "q101_ivfpq_adc" -> (q101 _),
-    "q102_semdedup" -> (q102 _),
-    "q103_triangle_census" -> (q103 _),
-    "q104_feature_gram" -> (q104 _),
-    "q105_pps_sample" -> (q105 _),
-    "q106_snapshot_scan" -> (q106 _),
-    "q107_ppjoin" -> (q107 _),
-    "q108_mosaic_ccl" -> (q108 _),
-    "q109_hll_stream" -> (q109 _),
-    "q110_pca_power" -> (q110 _),
-    "q111_negative_sample" -> (q111 _),
-    "q112_unicode_dedup" -> (q112 _),
-    "q113_caption_audit" -> (q113 _),
-    "q114_unicode_pretokenize" -> (q114 _),
-    "q115_unicode_fingerprint" -> (q115 _),
-    "q116_unicode_simhash" -> (q116 _),
-    "q117_span_coalesce" -> (q117 _),
-    "q118_weighted_reservoir" -> (q118 _),
-    "q119_containment_join" -> (q119 _),
-    "q120_radius_join" -> (q120 _),
-    "q121_collocation_lift" -> (q121 _),
-    "q122_sorted_neighborhood" -> (q122 _),
-    "q123_ann_recall" -> (q123 _),
-    "q124_ingest_dedup" -> (q124 _),
-    "q125_image_canonical" -> (q125 _),
-    "q126_compaction_plan" -> (q126 _),
-    "q127_bpe_pair_stats" -> (q127 _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q01_summary_agg" -> o01,
-    "q02_groupby_multi" -> o02,
-    "q03_limit_firstn" -> o03,
-    "q04_md5_filter" -> o04,
-    "q05_uprn_explode" -> o05,
-    "q06_spatial_sort" -> o06,
-    "q07_tilecode" -> o07,
-    "q08_recombine_union" -> o08,
-    "q09_coverage_minmax" -> o09,
-    "q10_window_topk" -> o10,
-    "q11_dedup_exact" -> o11,
-    "q12_token_count" -> o12,
-    "q13_quality_score" -> o13,
-    "q14_langid" -> o14,
-    "q15_bpe_tokens" -> o15,
-    "q16_embedding_topk" -> o16,
-    "q17_ngram_jaccard" -> o17,
-    "q18_stream_window" -> o18,
-    "q19_flights_datefloat" -> o19,
-    "q20_knn_points" -> o20,
-    "q21_dim_join" -> o21,
-    "q22_semi_anti" -> o22,
-    "q23_fingerprint" -> o23,
-    "q24_simhash_dedup" -> o24,
-    "q25_minhash_lsh" -> o25,
-    "q26_phash_neardup" -> o26,
-    "q27_ann_lsh" -> o27,
-    "q28_ann_ivf" -> o28,
-    "q29_embedding_neardup" -> o29,
-    "q30_veg_flagship" -> o30,
-    "q31_phash_dedup" -> o31,
-    "q32_veg_summary" -> o32,
-    "q33_toid2uprn" -> o33,
-    "q34_veg_irgb" -> o34,
-    "q35_veg_nn" -> o35,
-    "q36_media_frames" -> o36,
-    "q37_audio_features" -> o37,
-    "q38_seeded_sample" -> o38,
-    "q39_veg_hex" -> o39,
-    "q40_sessionize" -> o40,
-    "q41_asof_join" -> o41,
-    "q42_range_join" -> o42,
-    "q43_repetition" -> o43,
-    "q44_keywords" -> o44,
-    "q45_decontaminate" -> o45,
-    "q46_hash_split" -> o46,
-    "q47_dedup_clusters" -> o47,
-    "q48_redact_pii" -> o48,
-    "q49_stratified_sample" -> o49,
-    "q50_pack_sequences" -> o50,
-    "q51_vocab_oov" -> o51,
-    "q52_zorder" -> o52,
-    "q53_decontaminate_bloom" -> o53,
-    "q54_mixture_upsample" -> o54,
-    "q55_image_quality" -> o55,
-    "q56_stream_dedup" -> o56,
-    "q57_chunk_overlap" -> o57,
-    "q58_shuffle_order" -> o58,
-    "q59_stream_join" -> o59,
-    "q60_dup_spans" -> o60,
-    "q61_heavy_hitters" -> o61,
-    "q62_gapfill_resample" -> o62,
-    "q63_exact_quantiles" -> o63,
-    "q64_lm_score" -> o64,
-    "q65_quantize_int8" -> o65,
-    "q66_kmeans_assign" -> o66,
-    "q67_augment_image" -> o67,
-    "q68_source_profile" -> o68,
-    "q69_source_overlap" -> o69,
-    "q70_tile_pyramid" -> o70,
-    "q71_snapshot_diff" -> o71,
-    "q72_sliding_window" -> o72,
-    "q73_stream_enrich" -> o73,
-    "q74_cube_rollup" -> o74,
-    "q75_lang_pivot" -> o75,
-    "q76_curriculum_ntile" -> o76,
-    "q77_funnel" -> o77,
-    "q78_retention_cohort" -> o78,
-    "q79_label_centroid" -> o79,
-    "q80_event_transitions" -> o80,
-    "q81_hll_distinct" -> o81,
-    "q82_rrf_fusion" -> o82,
-    "q83_activity_bitmap" -> o83,
-    "q84_channel_norm" -> o84,
-    "q85_star_rollup" -> o85,
-    "q86_trend_slope" -> o86,
-    "q87_agg_merge" -> o87,
-    "q88_cdc_compact" -> o88,
-    "q89_source_gini" -> o89,
-    "q90_budget_apportion" -> o90,
-    "q91_mad_outliers" -> o91,
-    "q92_scd2_intervals" -> o92,
-    "q93_countmin_sketch" -> o93,
-    "q94_inverted_index" -> o94,
-    "q95_bm25_topk" -> o95,
-    "q96_sessionize" -> o96,
-    "q97_rank_auc" -> o97,
-    "q98_cohen_kappa" -> o98,
-    "q99_pagerank" -> o99,
-    "q100_calibration" -> o100,
-    "q101_ivfpq_adc" -> o101,
-    "q102_semdedup" -> o102,
-    "q103_triangle_census" -> o103,
-    "q104_feature_gram" -> o104,
-    "q105_pps_sample" -> o105,
-    "q106_snapshot_scan" -> o106,
-    "q107_ppjoin" -> o107,
-    "q108_mosaic_ccl" -> o108,
-    "q109_hll_stream" -> o109,
-    "q110_pca_power" -> o110,
-    "q111_negative_sample" -> o111,
-    "q112_unicode_dedup" -> o112,
-    "q113_caption_audit" -> o113,
-    "q114_unicode_pretokenize" -> o114,
-    "q115_unicode_fingerprint" -> o115,
-    "q116_unicode_simhash" -> o116,
-    "q117_span_coalesce" -> o117,
-    "q118_weighted_reservoir" -> o118,
-    "q119_containment_join" -> o119,
-    "q120_radius_join" -> o120,
-    "q121_collocation_lift" -> o121,
-    "q122_sorted_neighborhood" -> o122,
-    "q123_ann_recall" -> o123,
-    "q124_ingest_dedup" -> o124,
-    "q125_image_canonical" -> o125,
-    "q126_compaction_plan" -> o126,
-    "q127_bpe_pair_stats" -> o127
+  /** The query registry: `SparkEntry.queries`, `SparkEntry.oracleSql`
+    * and Bench's headline leaves all derive from it. */
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q01_summary_agg", q01, o01, headline = true),
+    QuerySpec("q02_groupby_multi", q02, o02, headline = true),
+    QuerySpec("q03_limit_firstn", q03, o03, headline = false),
+    QuerySpec("q04_md5_filter", q04, o04, headline = false),
+    QuerySpec("q05_uprn_explode", q05, o05, headline = false),
+    QuerySpec("q06_spatial_sort", q06, o06, headline = true),
+    QuerySpec("q07_tilecode", q07, o07, headline = false),
+    QuerySpec("q08_recombine_union", q08, o08, headline = false),
+    QuerySpec("q09_coverage_minmax", q09, o09, headline = false),
+    QuerySpec("q10_window_topk", q10, o10, headline = false),
+    QuerySpec("q11_dedup_exact", q11, o11, headline = true),
+    QuerySpec("q12_token_count", q12, o12, headline = false),
+    QuerySpec("q13_quality_score", q13, o13, headline = false),
+    QuerySpec("q14_langid", q14, o14, headline = true),
+    QuerySpec("q15_bpe_tokens", q15, o15, headline = false),
+    QuerySpec("q16_embedding_topk", q16, o16, headline = true),
+    QuerySpec("q17_ngram_jaccard", q17, o17, headline = true),
+    QuerySpec("q18_stream_window", q18, o18, headline = false),
+    QuerySpec("q19_flights_datefloat", q19, o19, headline = false),
+    QuerySpec("q20_knn_points", q20, o20, headline = false),
+    QuerySpec("q21_dim_join", q21, o21, headline = false),
+    QuerySpec("q22_semi_anti", q22, o22, headline = false),
+    QuerySpec("q23_fingerprint", q23, o23, headline = false),
+    QuerySpec("q24_simhash_dedup", q24, o24, headline = false),
+    QuerySpec("q25_minhash_lsh", q25, o25, headline = false),
+    QuerySpec("q26_phash_neardup", q26, o26, headline = false),
+    QuerySpec("q27_ann_lsh", q27, o27, headline = false),
+    QuerySpec("q28_ann_ivf", q28, o28, headline = false),
+    QuerySpec("q29_embedding_neardup", q29, o29, headline = false),
+    QuerySpec("q30_veg_flagship", q30, o30, headline = false),
+    QuerySpec("q31_phash_dedup", q31, o31, headline = false),
+    QuerySpec("q32_veg_summary", q32, o32, headline = false),
+    QuerySpec("q33_toid2uprn", q33, o33, headline = false),
+    QuerySpec("q34_veg_irgb", q34, o34, headline = false),
+    QuerySpec("q35_veg_nn", q35, o35, headline = false),
+    QuerySpec("q36_media_frames", q36, o36, headline = false),
+    QuerySpec("q37_audio_features", q37, o37, headline = false),
+    QuerySpec("q38_seeded_sample", q38, o38, headline = false),
+    QuerySpec("q39_veg_hex", q39, o39, headline = false),
+    QuerySpec("q40_sessionize", q40, o40, headline = false),
+    QuerySpec("q41_asof_join", q41, o41, headline = true),
+    QuerySpec("q42_range_join", q42, o42, headline = true),
+    QuerySpec("q43_repetition", q43, o43, headline = true),
+    QuerySpec("q44_keywords", q44, o44, headline = true),
+    QuerySpec("q45_decontaminate", q45, o45, headline = true),
+    QuerySpec("q46_hash_split", q46, o46, headline = true),
+    QuerySpec("q47_dedup_clusters", q47, o47, headline = true),
+    QuerySpec("q48_redact_pii", q48, o48, headline = true),
+    QuerySpec("q49_stratified_sample", q49, o49, headline = true),
+    QuerySpec("q50_pack_sequences", q50, o50, headline = true),
+    QuerySpec("q51_vocab_oov", q51, o51, headline = true),
+    QuerySpec("q52_zorder", q52, o52, headline = true),
+    QuerySpec("q53_decontaminate_bloom", q53, o53, headline = true),
+    QuerySpec("q54_mixture_upsample", q54, o54, headline = true),
+    QuerySpec("q55_image_quality", q55, o55, headline = true),
+    QuerySpec("q56_stream_dedup", q56, o56, headline = false),
+    QuerySpec("q57_chunk_overlap", q57, o57, headline = true),
+    QuerySpec("q58_shuffle_order", q58, o58, headline = true),
+    QuerySpec("q59_stream_join", q59, o59, headline = false),
+    QuerySpec("q60_dup_spans", q60, o60, headline = true),
+    QuerySpec("q61_heavy_hitters", q61, o61, headline = true),
+    QuerySpec("q62_gapfill_resample", q62, o62, headline = true),
+    QuerySpec("q63_exact_quantiles", q63, o63, headline = true),
+    QuerySpec("q64_lm_score", q64, o64, headline = true),
+    QuerySpec("q65_quantize_int8", q65, o65, headline = true),
+    QuerySpec("q66_kmeans_assign", q66, o66, headline = true),
+    QuerySpec("q67_augment_image", q67, o67, headline = true),
+    QuerySpec("q68_source_profile", q68, o68, headline = true),
+    QuerySpec("q69_source_overlap", q69, o69, headline = true),
+    QuerySpec("q70_tile_pyramid", q70, o70, headline = true),
+    QuerySpec("q71_snapshot_diff", q71, o71, headline = true),
+    QuerySpec("q72_sliding_window", q72, o72, headline = true),
+    QuerySpec("q73_stream_enrich", q73, o73, headline = false),
+    QuerySpec("q74_cube_rollup", q74, o74, headline = true),
+    QuerySpec("q75_lang_pivot", q75, o75, headline = true),
+    QuerySpec("q76_curriculum_ntile", q76, o76, headline = true),
+    QuerySpec("q77_funnel", q77, o77, headline = true),
+    QuerySpec("q78_retention_cohort", q78, o78, headline = true),
+    QuerySpec("q79_label_centroid", q79, o79, headline = true),
+    QuerySpec("q80_event_transitions", q80, o80, headline = true),
+    QuerySpec("q81_hll_distinct", q81, o81, headline = true),
+    QuerySpec("q82_rrf_fusion", q82, o82, headline = true),
+    QuerySpec("q83_activity_bitmap", q83, o83, headline = true),
+    QuerySpec("q84_channel_norm", q84, o84, headline = false),
+    QuerySpec("q85_star_rollup", q85, o85, headline = true),
+    QuerySpec("q86_trend_slope", q86, o86, headline = true),
+    QuerySpec("q87_agg_merge", q87, o87, headline = true),
+    QuerySpec("q88_cdc_compact", q88, o88, headline = true),
+    QuerySpec("q89_source_gini", q89, o89, headline = true),
+    QuerySpec("q90_budget_apportion", q90, o90, headline = true),
+    QuerySpec("q91_mad_outliers", q91, o91, headline = true),
+    QuerySpec("q92_scd2_intervals", q92, o92, headline = true),
+    QuerySpec("q93_countmin_sketch", q93, o93, headline = true),
+    QuerySpec("q94_inverted_index", q94, o94, headline = true),
+    QuerySpec("q95_bm25_topk", q95, o95, headline = true),
+    QuerySpec("q96_sessionize", q96, o96, headline = true),
+    QuerySpec("q97_rank_auc", q97, o97, headline = true),
+    QuerySpec("q98_cohen_kappa", q98, o98, headline = true),
+    QuerySpec("q99_pagerank", q99, o99, headline = true),
+    QuerySpec("q100_calibration", q100, o100, headline = true),
+    QuerySpec("q101_ivfpq_adc", q101, o101, headline = true),
+    QuerySpec("q102_semdedup", q102, o102, headline = true),
+    QuerySpec("q103_triangle_census", q103, o103, headline = true),
+    QuerySpec("q104_feature_gram", q104, o104, headline = true),
+    QuerySpec("q105_pps_sample", q105, o105, headline = true),
+    // reads fixtures/sidecars Verify's setup builds, which need not exist at bench time
+    QuerySpec("q106_snapshot_scan", q106, o106, headline = false),
+    QuerySpec("q107_ppjoin", q107, o107, headline = true),
+    QuerySpec("q108_mosaic_ccl", q108, o108, headline = true),
+    QuerySpec("q109_hll_stream", q109, o109, headline = false),
+    QuerySpec("q110_pca_power", q110, o110, headline = true),
+    QuerySpec("q111_negative_sample", q111, o111, headline = true),
+    // reads fixtures/sidecars Verify's setup builds, which need not exist at bench time
+    QuerySpec("q112_unicode_dedup", q112, o112, headline = false),
+    // reads fixtures/sidecars Verify's setup builds, which need not exist at bench time
+    QuerySpec("q113_caption_audit", q113, o113, headline = false),
+    QuerySpec("q114_unicode_pretokenize", q114, o114, headline = false),
+    QuerySpec("q115_unicode_fingerprint", q115, o115, headline = false),
+    QuerySpec("q116_unicode_simhash", q116, o116, headline = false),
+    QuerySpec("q117_span_coalesce", q117, o117, headline = true),
+    QuerySpec("q118_weighted_reservoir", q118, o118, headline = true),
+    QuerySpec("q119_containment_join", q119, o119, headline = true),
+    QuerySpec("q120_radius_join", q120, o120, headline = true),
+    QuerySpec("q121_collocation_lift", q121, o121, headline = true),
+    QuerySpec("q122_sorted_neighborhood", q122, o122, headline = true),
+    QuerySpec("q123_ann_recall", q123, o123, headline = false),
+    QuerySpec("q124_ingest_dedup", q124, o124, headline = false),
+    QuerySpec("q125_image_canonical", q125, o125, headline = true),
+    // reads fixtures/sidecars Verify's setup builds, which need not exist at bench time
+    QuerySpec("q126_compaction_plan", q126, o126, headline = false),
+    QuerySpec("q127_bpe_pair_stats", q127, o127, headline = true)
   )
 }

@@ -23,9 +23,11 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Queries.specs.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Queries.oracles
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    Queries.specs.map(q => q.name -> q.oracleSql).toMap
 }

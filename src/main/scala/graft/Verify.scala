@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,14 +11,7 @@ object Verify {
       case Some(pats) => n => pats.split(',').exists(n.contains)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // oracle sidecars first (one place; see Sidecars scaladoc) — the
     // o26/o31/o32/o33/o27/o28 SQL reads them back
@@ -34,21 +26,22 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** JSON string literal: escapes backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in a query's SQL would otherwise make a
+    * reader's json.load fail on oracle_sql.json. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

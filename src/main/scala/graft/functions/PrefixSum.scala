@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -48,8 +49,12 @@ object PrefixSum {
     // the final local cumsum) — materialize it once so its derivation
     // (often a corpus scan + aggregation at the call sites) doesn't
     // re-execute per pass; callers pass narrow (key, value[, ...])
-    // projections by contract
-    val dfm = df.localCheckpoint(true)
+    // projections by contract. An input that already is a materialized
+    // RDD scan (a checkpointed frame) is reused rather than copied again.
+    val dfm = df.queryExecution.logical match {
+      case _: LogicalRDD => df
+      case _ => df.localCheckpoint(true)
+    }
     val kc = col(keyCol).cast("long")
     val Array(kmin, kmax) = dfm.agg(min(kc), max(kc)).head() match {
       case r if r.isNullAt(0) => return dfm.withColumn(outCol, lit(null).cast("long"))

@@ -56,11 +56,24 @@ object SetSimJoin {
   private def buildDict(toks: DataFrame): DataFrame =
     toks.groupBy("tok").agg(count(lit(1)).as("df")).localCheckpoint(true)
 
+  /** The dictionary and its row count for the sparse-only test hooks,
+    * which skip routing: an RDD count of the checkpointed frame, so a
+    * hook runs no SQL aggregate beyond the sparse plan itself. */
+  private def unroutedDict(toks: DataFrame): (DataFrame, Long) = {
+    val dict = buildDict(toks)
+    (dict, dict.rdd.count())
+  }
+
   /** Rarest-first int rank per token, distributed (no SinglePartition):
-    * the (df asc, tok asc) total order of the WWW'07 family. */
-  private def rankedDict(dict: DataFrame): DataFrame =
+    * the (df asc, tok asc) total order of the WWW'07 family. `vocab` is
+    * the dictionary's row count: ranks past 2^31 - 1 would wrap the int
+    * cast, so a larger vocabulary fails here instead. */
+  private[graft] def rankedDict(dict: DataFrame, vocab: Long): DataFrame = {
+    require(vocab <= Int.MaxValue,
+      s"vocabulary of $vocab tokens overflows the int token rank")
     GlobalRank.byLongStringKey(dict, "df", "tok", "rank64")
       .select(col("tok"), col("rank64").cast("int").as("rank"))
+  }
 
   /** Deduped candidate pairs with their rank-array payloads:
     * (a_id, b_id, aw, bw, a_len, b_len).
@@ -75,9 +88,9 @@ object SetSimJoin {
     * `ranked` is eagerly localCheckpoint'd because it feeds three
     * consumers (the prefix explode and both re-attach joins) — without
     * it AQE would re-run the dictionary rank per consumer. */
-  private def candAndRanked(toks: DataFrame, dict: DataFrame,
+  private def candAndRanked(toks: DataFrame, dict: DataFrame, vocab: Long,
                             tNum: Long, tDen: Long): (DataFrame, DataFrame) = {
-    val ranked = toks.join(rankedDict(dict), "tok")
+    val ranked = toks.join(rankedDict(dict, vocab), "tok")
       .groupBy("doc_id").agg(sort_array(collect_list(col("rank"))).as("rw"))
       .select(col("doc_id"), col("rw"), size(col("rw")).as("len"))
       .withColumn("plen",
@@ -100,9 +113,9 @@ object SetSimJoin {
     (cand, ranked)
   }
 
-  private def prefixCandidates(toks: DataFrame, dict: DataFrame,
+  private def prefixCandidates(toks: DataFrame, dict: DataFrame, vocab: Long,
                                tNum: Long, tDen: Long): DataFrame = {
-    val (cand, ranked) = candAndRanked(toks, dict, tNum, tDen)
+    val (cand, ranked) = candAndRanked(toks, dict, vocab, tNum, tDen)
     cand
       .join(ranked.select(col("doc_id").as("a_id"), col("rw").as("aw")), "a_id")
       .join(ranked.select(col("doc_id").as("b_id"), col("rw").as("bw")), "b_id")
@@ -115,7 +128,8 @@ object SetSimJoin {
   private[graft] def candidates(docs: DataFrame, idCol: String, wordsCol: String,
                                 tNum: Long, tDen: Long): DataFrame = {
     val toks = tokensOf(docs, idCol, wordsCol)
-    candAndRanked(toks, buildDict(toks), tNum, tDen)._1.select("a_id", "b_id")
+    val (dict, vocab) = unroutedDict(toks)
+    candAndRanked(toks, dict, vocab, tNum, tDen)._1.select("a_id", "b_id")
   }
 
   // ---------------------------------------------------------------------
@@ -214,17 +228,18 @@ object SetSimJoin {
                       tNum: Long, tDen: Long): DataFrame = {
     val toks = tokensOf(docs, idCol, wordsCol)
     val dict = buildDict(toks)
+    val vocab = dict.count()
     val dense =
-      if (dict.count() <= MaxDenseBits) denseSets(toks, dict) else None
+      if (vocab <= MaxDenseBits) denseSets(toks, dict) else None
     dense match {
       case Some((sets, masks)) => denseJaccard(sets, masks, tNum, tDen)
-      case None                => prefixJaccard(toks, dict, tNum, tDen)
+      case None                => prefixJaccard(toks, dict, vocab, tNum, tDen)
     }
   }
 
-  private def prefixJaccard(toks: DataFrame, dict: DataFrame,
+  private def prefixJaccard(toks: DataFrame, dict: DataFrame, vocab: Long,
                             tNum: Long, tDen: Long): DataFrame =
-    prefixCandidates(toks, dict, tNum, tDen)
+    prefixCandidates(toks, dict, vocab, tNum, tDen)
       .withColumn("n_common", size(array_intersect(col("aw"), col("bw"))))
       .withColumn("n_union", col("a_len") + col("b_len") - col("n_common"))
       .where(col("n_common") * tDen >= col("n_union") * tNum)
@@ -234,7 +249,8 @@ object SetSimJoin {
   private[graft] def sparseJaccardSelfJoin(docs: DataFrame, idCol: String, wordsCol: String,
                                            tNum: Long, tDen: Long): DataFrame = {
     val toks = tokensOf(docs, idCol, wordsCol)
-    prefixJaccard(toks, buildDict(toks), tNum, tDen)
+    val (dict, vocab) = unroutedDict(toks)
+    prefixJaccard(toks, dict, vocab, tNum, tDen)
   }
 
   /** Exact CONTAINMENT self-join: every DIRECTED pair with
@@ -262,17 +278,18 @@ object SetSimJoin {
                           tNum: Long, tDen: Long): DataFrame = {
     val toks = tokensOf(docs, idCol, wordsCol)
     val dict = buildDict(toks)
+    val vocab = dict.count()
     val dense =
-      if (dict.count() <= MaxDenseBits) denseSets(toks, dict) else None
+      if (vocab <= MaxDenseBits) denseSets(toks, dict) else None
     dense match {
       case Some((sets, masks)) => denseContainment(sets, masks, tNum, tDen)
-      case None                => prefixContainment(toks, dict, tNum, tDen)
+      case None                => prefixContainment(toks, dict, vocab, tNum, tDen)
     }
   }
 
-  private def prefixContainment(toks: DataFrame, dict: DataFrame,
+  private def prefixContainment(toks: DataFrame, dict: DataFrame, vocab: Long,
                                 tNum: Long, tDen: Long): DataFrame = {
-    val ranked = toks.join(rankedDict(dict), "tok")
+    val ranked = toks.join(rankedDict(dict, vocab), "tok")
       .groupBy("doc_id").agg(sort_array(collect_list(col("rank"))).as("rw"))
       .select(col("doc_id"), col("rw"), size(col("rw")).as("len"))
       .withColumn("alpha", expr(s"CAST(($tNum * len + $tDen - 1) div $tDen AS INT)"))
@@ -303,6 +320,7 @@ object SetSimJoin {
   private[graft] def sparseContainmentSelfJoin(docs: DataFrame, idCol: String, wordsCol: String,
                                                tNum: Long, tDen: Long): DataFrame = {
     val toks = tokensOf(docs, idCol, wordsCol)
-    prefixContainment(toks, buildDict(toks), tNum, tDen)
+    val (dict, vocab) = unroutedDict(toks)
+    prefixContainment(toks, dict, vocab, tNum, tDen)
   }
 }

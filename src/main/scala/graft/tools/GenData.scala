@@ -1,49 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Materializes the deterministic bench tables (tiles/gardens/quarter/CIR/
   * GeoJSONL, `Bench.benchData`) for SPARK_GRAFT_SF_DIR without running the
-  * benchmark itself — used to (re)seed `data/gen` before an epoch hunt so
-  * `ScalingHunt` probes measure the engine, not the generator. */
+  * benchmark itself, so a later Bench run times the engine, not the
+  * generator. Prints the table paths as one JSON line. */
 object GenData {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]").appName("graft-gendata")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // `GenData big`: the 2x workload — 800x1200 tiles + 160k gardens from
-    // base (0,100) (still every id a valid OSGB code; the default base
-    // (400,100) maxes the valid grid at 400x1200) plus its quarter-height
-    // table. At 960k tiles t32 is ~8 s, so the fixed per-job cost is a ~4%
-    // tax and the RAW 8->32 pair converges to the marginal fit.
-    if (args.length >= 1 && args(0) == "big") {
-      import graft.data.Synthetic
-      def gen(w: Int, h: Int, parts: Int, path: String): Unit =
-        if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
-          Synthetic.tilesJpg(spark, w, h, 256, baseE = 0, baseN = 100)
-            .repartition(parts).write.mode("overwrite")
-            .option("parquet.block.size", (4 * 1024 * 1024).toString)
-            .parquet(path)
-        }
-      gen(800, 1200, 1536, "data/gen/tilesjpg_g800x1200b0_ts256")
-      gen(800, 300, 384, "data/gen/tilesjpg_g800x300b0_ts256")
-      val gPath = "data/gen/gardens_n160000_g800x1200b0"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(gPath))) {
-        Synthetic.gardens(spark, 160000L, 800, 1200, baseE = 0, baseN = 100)
-          .repartition(16).write.mode("overwrite").parquet(gPath)
-      }
-      println(s"""{"tiles":"data/gen/tilesjpg_g800x1200b0_ts256","nTiles":960000}""")
-    } else {
-      val bd = graft.Bench.benchData(spark, sfDir)
-      println(s"""{"tiles":"${bd.tilesPath}","gardens":"${bd.gardensPath}",""" +
-        s""""quarter":"${bd.tilesQuarterPath}","cir":"${bd.cirQuarterPath}",""" +
-        s""""geojsonl":"${bd.geojsonlPath}","nTiles":${bd.nTiles}}""")
-    }
+    val spark = Sessions.local("graft-gendata")
+    val bd = graft.Bench.benchData(spark, sfDir)
+    println(s"""{"tiles":"${bd.tilesPath}","gardens":"${bd.gardensPath}",""" +
+      s""""quarter":"${bd.tilesQuarterPath}","cir":"${bd.cirQuarterPath}",""" +
+      s""""geojsonl":"${bd.geojsonlPath}","nTiles":${bd.nTiles}}""")
     spark.stop()
   }
 }

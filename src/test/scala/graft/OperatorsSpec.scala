@@ -14,13 +14,7 @@ import graft.streaming.Streams
   * GeoJSON ingest, report formatting, and streaming. */
 class OperatorsSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("operators-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSpark.spark
 
   test("SparkEntry.entry driver smoke: rows > 0 with expected columns") {
     val df = SparkEntry.entry(spark)
@@ -610,7 +604,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("semdedup cluster-bucketed near-dup: equi-join plan, no all-pairs") {
-    val df = Queries.all("q102_semdedup")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries("q102_semdedup")(spark, TestSpark.sf0001)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       "semdedup candidate generation must stay a cluster-id equi-join")
@@ -637,7 +631,7 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("l_orderkey", "l_partkey")
     val dir = java.nio.file.Files.createTempDirectory("tri").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val row = Queries.all("q103_triangle_census")(spark, dir).head()
+    val row = SparkEntry.queries("q103_triangle_census")(spark, dir).head()
     assert(row.getLong(0) == 10)  // nodes
     assert(row.getLong(1) == 11)  // edges: 6 + 3 + 2
     assert(row.getLong(3) == 5, s"triangles = ${row.getLong(3)}")
@@ -1884,6 +1878,13 @@ class OperatorsSpec extends AnyFunSuite {
       (95, 190L, 190L), (99, 198L, 198L)))
   }
 
+  test("exact quantiles (q63): an empty corpus returns without throwing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-doc-empty").toString
+    spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(SparkEntry.queries("q63_exact_quantiles")(spark, dir).collect().isEmpty)
+  }
+
   test("int8 quantize (q65): affine code map, clamp, constant-vector edge") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-emb").toString
@@ -2712,10 +2713,16 @@ class OperatorsSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("SetSimJoin rank guard: a vocabulary past 2^31 - 1 tokens fails loudly") {
+    val e = intercept[IllegalArgumentException](
+      functions.SetSimJoin.rankedDict(spark.emptyDataFrame, 1L << 31))
+    assert(e.getMessage.contains("2147483648"))
+  }
+
   // ------------------------------------------------ q125 image canonicalization
 
   test("image canonicalization (q125): one keep per cluster, copies cluster with originals") {
-    val df = Queries.all("q125_image_canonical")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries("q125_image_canonical")(spark, TestSpark.sf0001)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"),
       "q125 must stay on the banded equi-join candidate path")

@@ -7,15 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class SqlSurfaceSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = {
-    // builder().withExtensions only applies when the session is first
-    // constructed; the suite may inherit one, so also register directly.
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("sql-surface-spec")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the shared session is built without GraftExtensions, so register
+    // the functions on it directly
+    val s = TestSpark.spark
     GraftFunctions.register(s)
     s
   }

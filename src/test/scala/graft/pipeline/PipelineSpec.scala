@@ -13,13 +13,7 @@ import graft.kernel.Kernels
   * straddlers, holed polygons, degenerate slivers and missing tiles. */
 class PipelineSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private val ts = 64
   private val gridW = 6
